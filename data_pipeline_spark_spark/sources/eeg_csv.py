@@ -17,24 +17,36 @@ sparkle-v5.py:49-102) with its four bugs fixed (SURVEY.md §4):
 4. the 8 metadata/header rows are skipped on the full read (v9 left
    them in as null-ish rows, sparkle-v9.py:105).
 
-Pipeline per file:
-    probe (≤8 rows, driver-side)  → metadata dict + header
-    schema build (all-double, v9) → full schema-explicit CSV scan
-    prelude skip                  → ×1e5 timestamp decode
-    Year/Month/Day derivation     → partitioned append write
-    ledger update + schema-registry JSON export
+Pipeline per batch:
+    probe (≤8 rows per file, driver-side) → metadata + header per file
+    group files by header                 → one schema-explicit CSV scan
+                                            per distinct header (all-
+                                            double, v9), unionByName'd
+    curate (shared with streaming)        → prelude skip, broadcast join
+                                            of per-file metadata, ×1e5
+                                            timestamp decode, Y/M/D
+    one partitioned write job             → _staging/<unique>/
+    manifest, ledger, publish             → rename part files into data/
+    schema-registry JSON export + ingest log
 
-Scale: the per-file probe reads 8 rows; the full scan is a single
-schema-explicit distributed CSV read; the write is shuffle-free
-(partitionBy fan-out at the task level). Many files ingest in one
-run; each file's scan parallelizes across its blocks.
+Scale: the per-file probe reads 8 rows; the whole batch is one
+schema-explicit distributed CSV scan per distinct header, with the
+file→metadata lookup broadcast from a single literal; the write is
+one shuffle-free job (partitionBy fan-out at the task level), so a
+batch of N files costs the same number of Spark jobs as one file and
+its scan parallelizes across all files' blocks at once. Publishing
+is one rename per part file, and exactly-once across crashes (see
+``ingest``).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import shutil
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +64,11 @@ META_KEYS = (
     "TestDate",
     "TestTime",
 )
+#: curated metadata columns, in store order: strings, but for the dates
+META_COLUMNS = META_KEYS[1:]
+DATE_COLUMNS = ("PatientBirthDate", "TestDate")
+STAGING = "_staging"
+MANIFEST = "_manifest.json"
 
 
 @dataclass
@@ -120,7 +137,7 @@ def build_schema(columns: list[str]) -> T.StructType:
 
 
 # ---------------------------------------------------------------------------
-# per-file curated read
+# curate: the one raw → curated transform (batch and streaming)
 # ---------------------------------------------------------------------------
 
 
@@ -139,49 +156,85 @@ def decode_clock(col):
     return F.timestamp_seconds(F.round(col * F.lit(1e5), 0).cast("long"))
 
 
-def _parse_ref_date(value: str | None):
-    """Reference dates are 'Y/M/D' strings; curated type is date.
-    try_to_date, not to_date: Spark 4 defaults to ANSI mode, where
-    to_date RAISES on malformed input — one 'PatientBirthDate,unknown'
-    row would abort the whole ingest run instead of landing as the
-    null the curated schema already allows."""
-    if not value:
-        return F.lit(None).cast("date")
-    return F.try_to_date(F.lit(value), "y/M/d")
+def _metadata_lookup(spark: SparkSession, headers: dict[str, SessionHeader]) -> DataFrame:
+    """(file name → typed patient metadata) as a tiny DataFrame built
+    from ONE JSON string literal: no Python-worker job (which
+    createDataFrame(list) launches) and a constant number of
+    driver→JVM calls at any file count. A missing key lands as '' —
+    and a missing or malformed date as null: try_to_date, not to_date,
+    because Spark 4 defaults to ANSI mode, where to_date RAISES on
+    malformed input — one 'PatientBirthDate,unknown' row would abort
+    the whole ingest run instead of landing as the null the curated
+    schema already allows."""
+    rows = [
+        {"_file": name, **{key: h.metadata.get(key, "") for key in META_COLUMNS}}
+        for name, h in headers.items()
+    ]
+    fields = ", ".join(f"{key}: string" for key in META_COLUMNS)
+    parsed = F.from_json(F.lit(json.dumps(rows)), f"array<struct<_file: string, {fields}>>")
+    return spark.range(1).select(F.inline(parsed)).select(
+        "_file",
+        *(
+            F.try_to_date(key, "y/M/d").alias(key) if key in DATE_COLUMNS else key
+            for key in META_COLUMNS
+        ),
+    )
+
+
+def _source_name(file_name):
+    """The on-disk name of a ``_metadata.file_name``, which Spark
+    reports percent-encoded ("my file.csv" arrives as "my%20file.csv").
+    '+' is escaped first: URI encoding leaves it literal, but
+    url_decode reads it as a space."""
+    return F.url_decode(F.replace(file_name, F.lit("+"), F.lit("%2B")))
+
+
+def curate(spark: SparkSession, raw_df: DataFrame, headers: dict[str, SessionHeader]) -> DataFrame:
+    """Raw all-double CSV scan → curated rows: raw signals + typed
+    patient metadata + decoded Timestamp + Year/Month/Day, the store
+    layout of batch and streaming ingest alike.
+
+    ``raw_df`` is a schema-explicit CSV scan (batch or streaming),
+    or a union of such scans that each carry ``_metadata`` as a
+    column; ``headers`` maps every file name the scan can read to its
+    probed header. Each row's metadata comes from a broadcast join on
+    its source file name, so one plan serves any number of files."""
+    ts = decode_clock(F.col("ClockDateTime"))  # see decode_clock for the truncation bug
+    return (
+        raw_df.withColumn("_file", _source_name(F.col("_metadata.file_name")))
+        # Prelude skip: the 8 prelude rows parse as all-null
+        # ClockDateTime under the double schema (string keys don't
+        # cast); data rows always carry a ClockDateTime. Declarative,
+        # distributed, no zipWithIndex.
+        .filter(F.col("ClockDateTime").isNotNull())
+        .join(F.broadcast(_metadata_lookup(spark, headers)), "_file", "left")
+        # "*" keeps the raw columns in scan order, then the metadata;
+        # naming thousands of signal columns one by one would cost a
+        # driver→JVM call each
+        .drop("_file", "_metadata")
+        .select(
+            "*",
+            ts.alias("Timestamp"),
+            F.year(ts).alias("Year"),
+            F.month(ts).alias("Month"),
+            F.dayofmonth(ts).alias("Day"),
+        )
+    )
+
+
+def _scan(spark: SparkSession, columns: list[str], paths: list[str]) -> DataFrame:
+    return spark.read.schema(build_schema(columns)).option("header", "false").csv(paths)
 
 
 def read_session(spark: SparkSession, path: str, header: SessionHeader | None = None) -> DataFrame:
-    """One session file → curated DataFrame (raw signals + typed
-    patient metadata + decoded Timestamp + Year/Month/Day)."""
+    """One session file → curated DataFrame (see ``curate``)."""
     if header is None:
         header = probe_header(spark, path)
-    schema = build_schema(header.columns)
-    df = spark.read.schema(schema).option("header", "false").csv(path)
-    # Prelude skip: the 8 prelude rows parse as all-null ClockDateTime
-    # under the double schema (string keys don't cast); data rows always
-    # carry a ClockDateTime. Declarative, distributed, no zipWithIndex.
-    df = df.filter(F.col("ClockDateTime").isNotNull())
-
-    meta = header.metadata
-    df = (
-        df.withColumn("PatientName", F.lit(meta.get("PatientName", "")).cast("string"))
-        .withColumn("PatientID", F.lit(meta.get("PatientID", "")).cast("string"))
-        .withColumn("PatientBirthDate", _parse_ref_date(meta.get("PatientBirthDate")))
-        .withColumn("TestDate", _parse_ref_date(meta.get("TestDate")))
-        .withColumn("TestTime", F.lit(meta.get("TestTime", "")).cast("string"))
-    )
-    # The load-bearing ×1e5 decode (see decode_clock for the
-    # truncation bug this avoids).
-    df = df.withColumn("Timestamp", decode_clock(F.col("ClockDateTime")))
-    return (
-        df.withColumn("Year", F.year("Timestamp"))
-        .withColumn("Month", F.month("Timestamp"))
-        .withColumn("Day", F.dayofmonth("Timestamp"))
-    )
+    return curate(spark, _scan(spark, header.columns, [path]), {os.path.basename(path): header})
 
 
 # ---------------------------------------------------------------------------
-# batch ingest with ledger idempotency
+# batch ingest: one staged write per batch, ledger idempotency
 # ---------------------------------------------------------------------------
 
 
@@ -189,27 +242,76 @@ def _ledger_path(output_dir: str) -> str:
     return os.path.join(output_dir, "_ingest_ledger.json")
 
 
-def _read_ledger(output_dir: str) -> set[str]:
+def _read_json_names(path: str) -> set[str] | None:
     try:
-        with open(_ledger_path(output_dir)) as f:
+        with open(path) as f:
             return set(json.load(f))
     except (FileNotFoundError, json.JSONDecodeError):
-        return set()
+        return None
+
+
+def _read_ledger(output_dir: str) -> set[str]:
+    return _read_json_names(_ledger_path(output_dir)) or set()
+
+
+def _write_json_atomic(path: str, names: set[str]) -> None:
+    """Atomic replace: writing in place with mode 'w' truncates
+    first, so a crash mid-dump would leave an empty/partial JSON —
+    for the ledger, one that _read_ledger treats as 'nothing
+    processed', and the next run would re-ingest EVERY file."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(sorted(names), f, indent=1)
+    os.replace(tmp, path)
 
 
 def _write_ledger(output_dir: str, processed: set[str]) -> None:
-    """Atomic replace: writing in place with mode 'w' truncates
-    first, so a crash mid-dump would leave an empty/partial JSON that
-    _read_ledger treats as 'nothing processed' — the next run would
-    re-append EVERY file, not just the one in flight (r8 review).
-    Temp-file + os.replace keeps the crash window at the documented
-    single in-flight file."""
     os.makedirs(output_dir, exist_ok=True)
-    target = _ledger_path(output_dir)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(sorted(processed), f, indent=1)
-    os.replace(tmp, target)
+    _write_json_atomic(_ledger_path(output_dir), processed)
+
+
+def _publish(stage: str, data_dir: str) -> None:
+    """Rename every data file of a committed stage into the same
+    Year=/Month=/Day= path under data_dir, then drop the stage (and
+    the staging root once empty). Idempotent: a re-run after a crash
+    part-way through moves only what is still staged. Stage-level
+    files (_SUCCESS, the manifest) go with the stage."""
+    for root, dirs, names in os.walk(stage):
+        if root == stage:
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            continue
+        dest = os.path.join(data_dir, os.path.relpath(root, stage))
+        os.makedirs(dest, exist_ok=True)
+        for name in names:
+            os.replace(os.path.join(root, name), os.path.join(dest, name))
+    _drop_stage(stage)
+
+
+def _drop_stage(stage: str) -> None:
+    shutil.rmtree(stage, ignore_errors=True)
+    try:
+        os.rmdir(os.path.dirname(stage))
+    except OSError:
+        pass  # other stages left, or already gone
+
+
+def _recover_stages(output_dir: str) -> None:
+    """Finish or discard what a crashed ingest left in _staging/. A
+    stage whose manifest names are all in the ledger had its batch
+    recorded as done: publish the rest of it. Any other stage (job
+    failed, or crashed before the ledger write) is deleted, and its
+    files are still unprocessed, so this run ingests them again."""
+    root = os.path.join(output_dir, STAGING)
+    if not os.path.isdir(root):
+        return
+    processed = _read_ledger(output_dir)
+    for name in sorted(os.listdir(root)):
+        stage = os.path.join(root, name)
+        batch = _read_json_names(os.path.join(stage, MANIFEST))
+        if batch and batch <= processed:
+            _publish(stage, os.path.join(output_dir, "data"))
+        else:
+            _drop_stage(stage)
 
 
 def export_schema_registry(df: DataFrame, output_dir: str, run_id: str | None = None) -> str:
@@ -251,39 +353,50 @@ def ingest(
     over the same staging dir is a no-op (empty-input guard — the v5
     fix, reference sparkle-v5.py:43-46).
 
-    Crash-safety contract: each file is appended and THEN ledgered,
-    one file at a time, bounding the damage to the single in-flight
-    file. A crash mid-write is clean (job-uncommitted output lives
-    only in ignored _temporary paths), but a crash in the window
-    AFTER the append job commits and BEFORE the ledger write lands
-    leaves that one file's rows committed, and the re-run appends
-    them again — at-least-once, one-file duplicate window, by design.
-    Strict exactly-once across arbitrary crash points goes through the
-    streaming checkpoint path (streaming/ingest.py), where the
-    checkpoint commits file progress transactionally."""
+    The batch is one plan (one scan per distinct header, unionByName'd
+    so mixed-schema staging dirs work, curated once) and one
+    partitioned write job into output_dir/_staging/<unique>/.
+
+    Crash-safety contract: exactly-once on a filesystem with atomic
+    rename, for a single writer per output_dir. After the write job
+    commits, ingest (1) writes the batch's file names into the
+    stage's manifest, (2) adds them to the ledger, (3) renames each
+    staged data file into data/Year=…/Month=…/Day=…/ and (4) removes
+    the stage; manifest and ledger are each an atomic replace. Every
+    call first recovers leftover stages: one whose manifest names are
+    all ledgered is published, any other is deleted and its files
+    re-ingested. A crash at any point therefore leaves each file's
+    rows in data/ once, or not at all until the next run."""
+    _recover_stages(output_dir)
     files = list_input_files(input_dir)
     processed = _read_ledger(output_dir)
     todo = [f for f in files if os.path.basename(f) not in processed]
     if not todo:
         return 0
 
-    data_dir = os.path.join(output_dir, "data")
-    schema_df: DataFrame | None = None
-    done: list[str] = []
+    headers = {os.path.basename(p): probe_header(spark, p) for p in todo}
+    groups: dict[tuple[str, ...], list[str]] = {}
     for path in todo:
-        df = read_session(spark, path)
-        df.write.partitionBy("Year", "Month", "Day").mode("append").parquet(data_dir)
-        processed.add(os.path.basename(path))
-        _write_ledger(output_dir, processed)
-        done.append(os.path.basename(path))
-        empty = df.limit(0)
-        schema_df = (
-            empty
-            if schema_df is None
-            else schema_df.unionByName(empty, allowMissingColumns=True)
-        )
-    export_schema_registry(schema_df, output_dir, run_id=run_id)
-    append_ingest_log(output_dir, run_id or "batch", done)
+        groups.setdefault(tuple(headers[os.path.basename(path)].columns), []).append(path)
+    # _metadata does not survive a union as a hidden column; carrying
+    # it explicitly lets curate key every group's rows the same way
+    scans = [
+        _scan(spark, list(cols), paths).select("*", "_metadata")
+        for cols, paths in groups.items()
+    ]
+    batch = curate(
+        spark,
+        functools.reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), scans),
+        headers,
+    )
+    stage = os.path.join(output_dir, STAGING, uuid.uuid4().hex)
+    batch.write.partitionBy("Year", "Month", "Day").parquet(stage)
+    names = set(headers)
+    _write_json_atomic(os.path.join(stage, MANIFEST), names)
+    _write_ledger(output_dir, processed | names)
+    _publish(stage, os.path.join(output_dir, "data"))
+    export_schema_registry(batch, output_dir, run_id=run_id)
+    append_ingest_log(output_dir, run_id or "batch", sorted(names))
     return len(todo)
 
 

@@ -27,7 +27,7 @@ from ..catalog import pin_utc
 from ..sources.eeg_csv import (
     SessionHeader,
     build_schema,
-    decode_clock,
+    curate,
     probe_header,
 )
 
@@ -43,17 +43,15 @@ def stream_ingest_eeg(
     Returns the number of rows written by THIS run (0 on a no-op
     re-run — the checkpoint already tracks every file).
 
-    The curated transform is shared with the batch path (same prelude
-    skip, ×1e5 decode, Y/M/D), INCLUDING per-file patient metadata:
-    each staged file's 8-row prelude is probed driver-side (bounded,
-    same probe the batch path runs) into a tiny (file → metadata)
-    lookup that is broadcast stream-static-joined on
-    input_file_name(), so the streaming curated schema is identical
-    to the batch one.
+    The curated transform is the batch path's ``eeg_csv.curate``
+    (prelude skip, per-file patient metadata, ×1e5 decode, Y/M/D):
+    each staged file's 8-row prelude is probed driver-side once, and
+    curate broadcast stream-static-joins those headers on the source
+    file name, so the streaming curated schema is the batch one.
 
     Note: the streaming file source requires a uniform schema across
-    the directory — enforced here by probing one file. Mixed-schema
-    staging dirs go through the batch path instead.
+    the directory — the first file's header (or ``header``) gives it.
+    Mixed-schema staging dirs go through the batch path instead.
     """
     # Settle guard (r17 advisor fix): the staging hardlinks share the
     # source inode, so a CSV still being APPENDED after the listdir
@@ -91,27 +89,11 @@ def stream_ingest_eeg(
             first_stat[f] = (st.st_size, st.st_mtime)
     if not files:
         return 0
-    if header is None:
-        header = probe_header(spark, os.path.join(input_dir, files[0]))
-    schema = build_schema(header.columns)
-
-    # Per-file metadata lookup. Probing is O(files) driver-side reads
-    # of ≤8 rows each — the same cost the batch path already pays; at
-    # cluster scale this is a metadata pass, not a data pass.
-    meta_rows = []
-    for f in files:
-        h = probe_header(spark, os.path.join(input_dir, f))
-        m = h.metadata
-        meta_rows.append(
-            (
-                f,
-                m.get("PatientName", ""),
-                m.get("PatientID", ""),
-                m.get("PatientBirthDate") or None,
-                m.get("TestDate") or None,
-                m.get("TestTime", ""),
-            )
-        )
+    # Per-file headers: O(files) driver-side reads of ≤8 rows each —
+    # the same cost the batch path pays; at cluster scale this is a
+    # metadata pass, not a data pass.
+    headers = {f: probe_header(spark, os.path.join(input_dir, f)) for f in files}
+    schema = build_schema((header or headers[files[0]]).columns)
     # Second observation: drop any file whose (size, mtime) moved
     # while the probes above ran — an active writer observed across
     # a real I/O interval, not a point-in-time mtime guess. Only
@@ -125,28 +107,10 @@ def stream_ingest_eeg(
                 continue  # vanished mid-probe: defer, not ingest
             if (st.st_size, st.st_mtime) == first_stat[f]:
                 settled.append(f)
-        if len(settled) != len(files):
-            kept = set(settled)
-            meta_rows = [r for r in meta_rows if r[0] in kept]
-            files = settled
+        files = settled
+        headers = {f: headers[f] for f in files}
         if not files:
             return 0
-
-    meta_df = spark.createDataFrame(
-        meta_rows,
-        "_file string, PatientName string, PatientID string, "
-        "_birth string, _testdate string, TestTime string",
-    ).select(
-        "_file",
-        "PatientName",
-        "PatientID",
-        # try_to_date: under Spark 4's default ANSI mode, to_date
-        # RAISES on malformed metadata — one bad file would abort the
-        # whole streaming run instead of landing a null date
-        F.try_to_date("_birth", "y/M/d").alias("PatientBirthDate"),
-        F.try_to_date("_testdate", "y/M/d").alias("TestDate"),
-        "TestTime",
-    )
 
     checkpoint = os.path.join(output_dir, "_checkpoint")
     data_dir = os.path.join(output_dir, "data")
@@ -174,25 +138,13 @@ def stream_ingest_eeg(
 
                 shutil.copy2(os.path.join(input_dir, f), dst)
 
-    stream = (
+    stream = curate(
+        spark,
         spark.readStream.schema(schema)
         .option("header", "false")
         .option("pathGlobFilter", "*.csv")
-        .csv(staged_dir)
-        .filter(F.col("ClockDateTime").isNotNull())
-        # input_file_name() is a URI (percent-encoded), but meta_df keys
-        # on raw os.listdir names — url_decode so "my file.csv" matches
-        # instead of silently joining to null metadata.
-        .withColumn(
-            "_file",
-            F.url_decode(F.element_at(F.split(F.input_file_name(), "/"), -1)),
-        )
-        .join(F.broadcast(meta_df), "_file", "left")
-        .drop("_file")
-        .withColumn("Timestamp", decode_clock(F.col("ClockDateTime")))
-        .withColumn("Year", F.year("Timestamp"))
-        .withColumn("Month", F.month("Timestamp"))
-        .withColumn("Day", F.dayofmonth("Timestamp"))
+        .csv(staged_dir),
+        headers,
     )
     query = (
         stream.writeStream.format("parquet")

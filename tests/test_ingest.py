@@ -2,15 +2,18 @@
 
 Pins: prelude skip, metadata extraction, the ×1e5 timestamp decode,
 partitioned write, ledger idempotency (the reference's
-read-union-append duplication bug #1 must NOT reproduce), schema
-registry, supercategory fold, wide→tidy melt.
+read-union-append duplication bug #1 must NOT reproduce), the staged
+exactly-once write across crash points, one job count per batch at
+any file count, schema registry, supercategory fold, wide→tidy melt.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
 import os
+import uuid
 
 import pytest
 
@@ -207,3 +210,161 @@ def test_ingest_at_reference_width(spark, tmp_path):
     # a pruned narrow read off the wide store stays correct
     row = back.select("S1_1", "S6037_1", "Time").orderBy("Time").first()
     assert row.S1_1 is not None and row.S6037_1 is not None
+
+
+# ---------------------------------------------------------------------------
+# one staged write per batch: exactly-once across crash points
+# ---------------------------------------------------------------------------
+
+
+def _session_files(root, **kw):
+    shape = dict(n_patients=3, max_sessions=1, rows_per_session=20, n_signals=4)
+    shape.update(kw)
+    return generate_corpus(root, **shape)
+
+
+def _per_file(spark, src):
+    """The batch the store must hold: every file's read_session rows."""
+    frames = [eeg_csv.read_session(spark, p) for p in eeg_csv.list_input_files(src)]
+    return functools.reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+
+def _assert_store_is(spark, out, want):
+    got = spark.read.parquet(os.path.join(out, "data")).select(*want.columns)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0  # nothing duplicated
+    assert want.exceptAll(got).count() == 0  # nothing lost
+    assert not os.path.exists(os.path.join(out, eeg_csv.STAGING))
+
+
+def test_crash_inside_write_job_rerun_exactly_once(spark, tmp_path, monkeypatch):
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    paths = _session_files(src, seed=21)
+    real = eeg_csv.curate
+
+    def failing_curate(spark, raw_df, headers):
+        df = real(spark, raw_df, headers)
+        boom = F.raise_error(F.lit("injected task failure"))
+        return df.withColumn("Time", F.when(F.col("Time") >= 10, boom).otherwise(F.col("Time")))
+
+    monkeypatch.setattr(eeg_csv, "curate", failing_curate)
+    with pytest.raises(Exception, match="injected task failure"):
+        eeg_csv.ingest(spark, src, out)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(out, "data"))
+
+    assert eeg_csv.ingest(spark, src, out) == len(paths)
+    _assert_store_is(spark, out, _per_file(spark, src))
+
+
+def test_crash_before_ledger_write_rerun_exactly_once(spark, tmp_path, monkeypatch):
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    paths = _session_files(src, seed=22)
+
+    def crash(*_):
+        raise RuntimeError("injected crash before the ledger write")
+
+    monkeypatch.setattr(eeg_csv, "_write_ledger", crash)
+    with pytest.raises(RuntimeError, match="before the ledger"):
+        eeg_csv.ingest(spark, src, out)
+    monkeypatch.undo()
+    # the job committed into its stage, and nothing reached data/
+    [stage] = os.listdir(os.path.join(out, eeg_csv.STAGING))
+    assert os.path.exists(os.path.join(out, eeg_csv.STAGING, stage, eeg_csv.MANIFEST))
+    assert not os.path.exists(os.path.join(out, "data"))
+
+    assert eeg_csv.ingest(spark, src, out) == len(paths)
+    _assert_store_is(spark, out, _per_file(spark, src))
+
+
+def test_crash_mid_publish_rerun_exactly_once(spark, tmp_path, monkeypatch):
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    paths = _session_files(src, seed=23)
+    real_replace = os.replace
+    moved = []
+
+    def crash_on_second_part(a, b):
+        if str(a).endswith(".parquet"):
+            if moved:
+                raise OSError("injected crash mid-publish")
+            moved.append(a)
+        real_replace(a, b)
+
+    monkeypatch.setattr(os, "replace", crash_on_second_part)
+    with pytest.raises(OSError, match="mid-publish"):
+        eeg_csv.ingest(spark, src, out)
+    monkeypatch.undo()
+    # part-way: one part file published, the rest still staged, and
+    # the batch already ledgered
+    staged = [
+        f for _, _, names in os.walk(os.path.join(out, eeg_csv.STAGING))
+        for f in names if f.endswith(".parquet")
+    ]
+    assert len(moved) == 1 and staged
+    assert eeg_csv._read_ledger(out) == {os.path.basename(p) for p in paths}
+
+    # the re-run publishes the rest and has no new file to ingest
+    assert eeg_csv.ingest(spark, src, out) == 0
+    _assert_store_is(spark, out, _per_file(spark, src))
+
+
+# ---------------------------------------------------------------------------
+# what the fused batch scan must carry
+# ---------------------------------------------------------------------------
+
+
+def test_ingest_mixed_headers_in_one_batch(spark, tmp_path):
+    """Two header shapes (4 and 6 signals) in one staging dir land in
+    one call; each file's rows equal its read_session rows, with the
+    columns its header lacks null."""
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    narrow = _session_files(src, n_patients=2, n_signals=4, seed=31)
+    wide = _session_files(src, n_patients=2, n_signals=6, seed=32, patient_offset=10)
+    assert eeg_csv.ingest(spark, src, out) == len(narrow) + len(wide)
+    _assert_store_is(spark, out, _per_file(spark, src))
+    got = spark.read.parquet(os.path.join(out, "data"))
+    narrow_ids = [eeg_csv.probe_header(spark, p).metadata["PatientID"] for p in narrow]
+    narrow_rows = got.filter(F.col("PatientID").isin(narrow_ids))
+    assert narrow_rows.count() == 20 * len(narrow)
+    assert narrow_rows.filter(F.col("S5_1").isNotNull() | F.col("S6_1").isNotNull()).count() == 0
+
+
+def test_ingest_odd_file_name_keeps_metadata(spark, tmp_path):
+    """Spark reports a scanned file's name percent-encoded; a name
+    with a space, '+' and '%' must still key its probed metadata."""
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    [path] = _session_files(src, n_patients=1, seed=33)
+    odd = os.path.join(src, "patient one+100%.csv")
+    os.rename(path, odd)
+    want = eeg_csv.probe_header(spark, odd).metadata["PatientID"]
+    assert eeg_csv.ingest(spark, src, out) == 1
+    got = spark.read.parquet(os.path.join(out, "data"))
+    assert got.count() == 20
+    assert {r.PatientID for r in got.select("PatientID").distinct().collect()} == {want}
+
+
+# ---------------------------------------------------------------------------
+# one Spark job count per batch, whatever its file count
+# ---------------------------------------------------------------------------
+
+
+def _jobs_launched(spark, fn):
+    sc = spark.sparkContext
+    group = f"ingest-job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ingest job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_job_count_independent_of_file_count(spark, tmp_path):
+    """Ingesting 4 same-header files launches as many Spark jobs as
+    ingesting 1: a per-file job loop would scale with the batch."""
+    counts = {}
+    for n in (1, 4):
+        src, out = str(tmp_path / f"in{n}"), str(tmp_path / f"out{n}")
+        _session_files(src, n_patients=n, seed=40 + n)
+        counts[n] = _jobs_launched(spark, lambda: eeg_csv.ingest(spark, src, out))
+    assert counts[1] == counts[4] <= 2, counts
