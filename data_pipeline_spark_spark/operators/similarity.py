@@ -1,7 +1,6 @@
 """Similarity search over embedding vectors (`embeddings.embedding`,
-array<float> 64-dim).
-
-EXT tier (north-star). Two paths:
+array<float> 64-dim): an approximate-nearest-neighbour (ANN) ladder,
+each rung checked against the exact answer.
 
 - `sim_search`: brute-force cosine top-k — the exactness baseline.
   Query set is broadcast; every (query, candidate) cosine is computed
@@ -9,12 +8,23 @@ EXT tier (north-star). Two paths:
   window. At 100 TB this is a full scan per query batch — correct,
   embarrassingly parallel, bandwidth-bound: the right baseline to
   verify recall against.
-- `sim_search_lsh`: random-hyperplane LSH (BucketedRandomProjectionLSH
-  on L2-normalized vectors — euclidean distance on the unit sphere is
-  monotone in cosine: d² = 2−2cos). Candidates come from hash-bucket
-  collisions only, so cost scales with collisions, not n·q. This is
-  the scale path; an IVF (k-means coarse quantizer) variant would slot
-  in the same way with a cluster-assignment join.
+- Bucketed candidates, recall-checked against `sim_search`:
+  `sim_search_lsh` (random-hyperplane LSH on the unit sphere) and
+  `sim_search_ivf` (k-means coarse cells, nprobe of them scored).
+- Compressed vectors: `sim_search_rerank` (int8 first stage, exact
+  rerank) and `sim_search_pq` (product-quantization codes scanned
+  through an asymmetric-distance (ADC) lookup table).
+- IVF-PQ, the serving-tier capstone: `sim_search_ivfpq` (seeded
+  codebook), `sim_search_ivfadc_residual` (residual codes, per-cell
+  ADC tables) and `sim_search_ivfpq_trained` (Lloyd-trained
+  codebook). The three share one Spark core — `_pq_sub`,
+  `_ivfpq_coarse`, `_assign_codes`, `_pq_terms`, `_ivf_adc` — and
+  one set of SQL twins for their value oracles. Every query trains
+  what it needs from its input; nothing persists between calls.
+- `sim_search_filtered`, `retrieval_hybrid_rrf`,
+  `sim_search_ivf_stats`, `embedding_quantize`, `embedding_profile`:
+  filtered search, BM25+vector fusion and index/corpus audits built
+  on the same pieces.
 """
 
 from __future__ import annotations
@@ -23,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, load
+from ..catalog import load
 from ..functions.vector import (
     as_double_array,
     cosine,
@@ -34,6 +44,27 @@ from ..registry import query
 
 _N_QUERIES = 5
 _TOP_K = 10
+
+
+def _embeddings(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """(vec_id, *cols, emb): the embeddings scan with the vector
+    widened to array<double>, so every rung accumulates in double
+    precision like its DuckDB oracle."""
+    return load(spark, sf_dir, "embeddings").select(
+        "vec_id", *cols, as_double_array(F.col("embedding")).alias("emb")
+    )
+
+
+def _topk(df: DataFrame, *order, k: int = _TOP_K) -> DataFrame:
+    """Rows ranked 1..``k`` per ``query_id`` by ``order`` (default:
+    rounded cosine desc, neighbor id asc) in a ``rnk`` column. Every
+    ordering ends in an id, so the rank is total and both engines
+    agree row for row."""
+    order = order or (F.col("cos_sim").desc(), F.col("neighbor_id").asc())
+    w = W.partitionBy("query_id").orderBy(*order)
+    return df.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= k
+    )
 
 
 _EXACT_TOPK_SQL = f"""
@@ -62,9 +93,7 @@ def sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     desc, neighbor id asc)."""
     # no fan_out here: at this row count the repartition shuffle costs
     # more than the cosine evaluations it would parallelize
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
+    e = _embeddings(spark, sf_dir)
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
@@ -76,13 +105,7 @@ def sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine(F.col("q_emb"), F.col("emb")), 4).alias("cos_sim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-    )
+    return _topk(scored)
 
 
 def _recall_vs_exact(
@@ -139,9 +162,7 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
+    e = _embeddings(spark, sf_dir)
     unit = (
         # a zero-norm vector has no direction (and under default ANSI
         # mode the division would RAISE, not NaN) — excluded from the
@@ -169,13 +190,7 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("datasetB.vec_id").alias("neighbor_id"),
         F.round(1 - (F.col("euclid") ** 2) / 2, 4).alias("cos_sim"),
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-    )
+    return _topk(scored)
 
 
 _IVF_CELLS = 16
@@ -215,9 +230,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.vector import dot
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
+    e = _embeddings(spark, sf_dir)
     unit = e.filter(norm(F.col("emb")) > 0).select(
         "vec_id", unit_normalize(F.col("emb")).alias("unit")
     )  # zero-norm guard: no direction, and ANSI division would raise
@@ -240,16 +253,14 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # nprobe nearest cells per query (centroid table broadcast — it is
     # k rows at any corpus size)
-    probe_w = W.partitionBy("query_id").orderBy(
-        F.col("cell_sim").desc(), F.col("cell").asc()
-    )
-    probes = (
-        q.join(F.broadcast(centroids))
-        .withColumn("cell_sim", dot(F.col("q_unit"), F.col("centroid")))
-        .withColumn("prb", F.row_number().over(probe_w))
-        .filter(F.col("prb") <= _IVF_NPROBE)
-        .select("query_id", "q_unit", "cell")
-    )
+    probes = _topk(
+        q.join(F.broadcast(centroids)).withColumn(
+            "cell_sim", dot(F.col("q_unit"), F.col("centroid"))
+        ),
+        F.col("cell_sim").desc(),
+        F.col("cell").asc(),
+        k=_IVF_NPROBE,
+    ).select("query_id", "q_unit", "cell")
     # exact cosine only inside probed cells
     scored = (
         probes.join(assigned, "cell")
@@ -260,13 +271,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot(F.col("q_unit"), F.col("unit")), 4).alias("cos_sim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-    )
+    return _topk(scored)
 
 
 def quantize_embeddings(d: DataFrame) -> DataFrame:
@@ -363,9 +368,8 @@ def sim_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool covers the true top-{_TOP_K} and the rerank output EQUALS
     exact search — asserted, not assumed. If a future corpus ever
     broke that, the fix is a wider pool, not a weaker check."""
-    e = load(spark, sf_dir, "embeddings")
-    qz = quantize_embeddings(e).select("vec_id", "qvec")
-    fl = e.select("vec_id", as_double_array(F.col("embedding")).alias("emb"))
+    fl = _embeddings(spark, sf_dir, "embedding")
+    qz = quantize_embeddings(fl).select("vec_id", "qvec")
 
     zero = F.lit(0).cast("bigint")
 
@@ -391,14 +395,12 @@ def sim_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("approx_sim"),
         )
     )
-    wa = W.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id").asc()
-    )
-    cands = (
-        approx.withColumn("arnk", F.row_number().over(wa))
-        .filter(F.col("arnk") <= _RERANK_CANDIDATES)
-        .select("query_id", "neighbor_id")
-    )
+    cands = _topk(
+        approx,
+        F.col("approx_sim").desc(),
+        F.col("neighbor_id").asc(),
+        k=_RERANK_CANDIDATES,
+    ).select("query_id", "neighbor_id")
     # stage 2: exact float cosine on the candidate pool only
     qf = fl.select(F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb"))
     cf = fl.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("c_emb"))
@@ -411,13 +413,7 @@ def sim_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine(F.col("q_emb"), F.col("c_emb")), 4).alias("cos_sim"),
         )
     )
-    we = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rnk", F.row_number().over(we))
-        .filter(F.col("rnk") <= _TOP_K)
-    )
+    return _topk(exact)
 
 
 _EMB_PROFILE_SQL = """
@@ -485,67 +481,97 @@ _PQ_K = 8       # codebook entries per subspace
 _PQ_TOP = 10
 
 
-def _pq_sq_spark(a, b):
-    """Unrolled ||a−b||² over an 8-dim subvector — eight explicit
-    (x−y)·(x−y) terms summed left-to-right, whole-stage codegen, and
-    the SAME association order the SQL oracle uses, so the double is
+def _sq_spark(diff):
+    """Unrolled Σ diff(i)² over the ``_PQ_SUB`` components of a
+    subvector, ``diff(i)`` being the per-component difference Column.
+    Explicit terms summed left-to-right run in whole-stage codegen
+    with the SAME association order as [[_sq_sql]], so the double is
     bit-identical in both engines (no fold lambda: interpreted, and
     fold order is the one thing an oracle can't see)."""
-    terms = [
-        (F.element_at(a, i) - F.element_at(b, i))
-        * (F.element_at(a, i) - F.element_at(b, i))
-        for i in range(1, _PQ_SUB + 1)
-    ]
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc + t
+    acc = None
+    for i in range(1, _PQ_SUB + 1):
+        d = diff(i)
+        acc = d * d if acc is None else acc + d * d
     return acc
 
 
-def _pq_sq_sql(a: str, b: str) -> str:
+def _diff(a: str, b: str):
+    """Per-component difference ``a[i] − b[i]`` of two array columns."""
+    return lambda i: F.element_at(a, i) - F.element_at(b, i)
+
+
+def _micro(x):
+    """A double quantized ONCE to integer micro-units; everything
+    downstream (argmin, sums, ranking) is exact bigint arithmetic."""
+    return F.round(x * 1000000).cast("bigint")
+
+
+def _sq_sql(diff) -> str:
+    """SQL twin of [[_sq_spark]]: ``diff(i)`` renders the i-th
+    per-component difference."""
     return " + ".join(
-        f"({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])"
-        for i in range(1, _PQ_SUB + 1)
+        f"({diff(i)}) * ({diff(i)})" for i in range(1, _PQ_SUB + 1)
     )
 
 
-# shared CTE prefix for the PQ rungs (sim_search_pq and the IVF+PQ
-# capstone): raw vectors, PQ codebook, subvector expansion, code
-# assignment, and the per-query ADC lookup table
-_PQ_CORE_SQL = f"""
+def _diff_sql(a: str, b: str):
+    return lambda i: f"{a}[{i}] - {b}[{i}]"
+
+
+def _micro_sql(x: str) -> str:
+    return f"CAST(round(({x}) * 1000000) AS BIGINT)"
+
+
+# every PQ-family oracle starts from the raw vectors and their
+# per-subspace subvectors
+_PQ_SUB_SQL = f"""
     e AS (
       SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-    ),
-    cb AS (  -- codebook: subvectors of the first {_PQ_K} vectors
-      SELECT m.m, e.vec_id AS c,
-             e.emb[m.m * {_PQ_SUB} + 1 : (m.m + 1) * {_PQ_SUB}] AS cent
-      FROM e, (SELECT unnest(range(0, {_PQ_M})) AS m) m
-      WHERE e.vec_id < {_PQ_K}
     ),
     sub AS (
       SELECT e.vec_id, m.m,
              e.emb[m.m * {_PQ_SUB} + 1 : (m.m + 1) * {_PQ_SUB}] AS sv
       FROM e, (SELECT unnest(range(0, {_PQ_M})) AS m) m
+    )"""
+
+
+def _assign_codes_sql(src: str, cb: str, dist: str, carry: str = "") -> str:
+    """SQL twin of [[_assign_codes]]: the (``dist``, centroid id)
+    argmin code per (vec_id, m) of ``src`` rows ``s`` against
+    codebook ``cb`` (keyed ``cm``, ``c``); ``carry`` lists further
+    ``src`` columns to keep, each followed by a comma."""
+    return f"""
+      SELECT vec_id, m, {carry}c AS code FROM (
+        SELECT s.*, cb.c,
+               row_number() OVER (PARTITION BY s.vec_id, s.m
+                                  ORDER BY {dist}, cb.c) AS rn
+        FROM {src} s JOIN {cb} cb ON s.m = cb.cm) WHERE rn = 1"""
+
+
+def _pq_terms_sql(src: str, cb: str, dist: str, carry: str = "") -> str:
+    """SQL twin of [[_pq_terms]]: the ADC lookup table (query ×
+    subspace × code) of ``dist`` between each query's ``src`` rows
+    ``s`` and codebook ``cb``."""
+    return f"""
+      SELECT s.vec_id AS query_id, {carry}s.m, cb.c, {dist} AS term_u
+      FROM {src} s JOIN {cb} cb ON s.m = cb.cm
+      WHERE s.vec_id < {_N_QUERIES}"""
+
+
+_SEEDED_DIST_SQL = _micro_sql(_sq_sql(_diff_sql("s.sv", "cb.cent")))
+
+# the seeded codebook, its codes and the per-query ADC lookup table,
+# shared by sim_search_pq and sim_search_ivfpq
+_PQ_SEEDED_SQL = f"""
+    cb AS (  -- codebook: subvectors of the first {_PQ_K} vectors
+      SELECT m AS cm, vec_id AS c, sv AS cent FROM sub WHERE vec_id < {_PQ_K}
     ),
-    dists AS (
-      SELECT s.vec_id, s.m, cb.c,
-             CAST(round(({_pq_sq_sql("s.sv", "cb.cent")}) * 1000000)
-                  AS BIGINT) AS dist_u
-      FROM sub s JOIN cb ON s.m = cb.m
-    ),
-    codes AS (
-      SELECT vec_id, m, c AS code FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, m
-                                     ORDER BY dist_u, c) AS rn
-        FROM dists) WHERE rn = 1
+    codes AS ({_assign_codes_sql("sub", "cb", _SEEDED_DIST_SQL)}
     ),
     terms AS (  -- ADC lookup table: query × subspace × code
-      SELECT q.vec_id AS query_id, cb.m, cb.c,
-             CAST(round(({_pq_sq_sql("q.sv", "cb.cent")}) * 1000000)
-                  AS BIGINT) AS term_u
-      FROM sub q JOIN cb ON q.m = cb.m
-      WHERE q.vec_id < {_N_QUERIES}
+      {_pq_terms_sql("sub", "cb", _SEEDED_DIST_SQL)}
     )"""
+
 
 def _pq_ranked_tail_sql(unit: str = "1000000.0") -> str:
     """Shared top-k tail of every PQ-family oracle; ``unit`` is the
@@ -563,10 +589,9 @@ def _pq_ranked_tail_sql(unit: str = "1000000.0") -> str:
 """
 
 
-_PQ_RANKED_TAIL_SQL = _pq_ranked_tail_sql()
-
 _PQ_SQL = f"""
-    WITH {_PQ_CORE_SQL},
+    WITH {_PQ_SUB_SQL},
+    {_PQ_SEEDED_SQL},
     adc AS (
       SELECT t.query_id, c.vec_id AS neighbor_id,
              CAST(SUM(t.term_u) AS BIGINT) AS est_dist_u
@@ -575,7 +600,7 @@ _PQ_SQL = f"""
       WHERE c.vec_id <> t.query_id
       GROUP BY 1, 2
     )
-    {_PQ_RANKED_TAIL_SQL}
+    {_pq_ranked_tail_sql()}
 """
 
 
@@ -605,21 +630,41 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, and the query scan touches only the integer code table —
     the plan a 1B-vector serving tier runs, with the codes table as
     the only data-proportional state."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
-    sub, cb, codes = _pq_frames(e)
-    terms = _pq_terms(sub, cb)
+    codes, terms = _pq_seeded(_pq_sub(spark, sf_dir))
     adc = (
         codes.join(
             F.broadcast(terms),
             (F.col("m") == F.col("tm")) & (F.col("code") == F.col("tc")),
         )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .filter(F.col("vec_id") != F.col("tq"))
+        .groupBy(
+            F.col("tq").alias("query_id"), F.col("vec_id").alias("neighbor_id")
+        )
         .agg(F.sum("term_u").cast("bigint").alias("est_dist_u"))
     )
     return _pq_ranked(adc)
+
+
+def _pq_sub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(vector, subspace) subvectors ``(vec_id, m, sv)``: the one
+    frame every PQ rung's codebooks, codes, ADC tables and coarse
+    cells derive from."""
+    ms = F.explode(
+        F.sequence(F.lit(0), F.lit(_PQ_M - 1))
+    ).alias("m")
+    return (
+        _embeddings(spark, sf_dir)
+        .select("vec_id", "emb", ms)
+        .select(
+            "vec_id",
+            "m",
+            F.slice("emb", F.col("m") * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
+        )
+        # three-plus consumers (codebook, code assignment, ADC table,
+        # and the IVF coarse frames) each re-run the scan + explode
+        # without a pin; measured 1.13 → 1.05 s on the IVF+PQ rung
+        .localCheckpoint(eager=False)
+    )
 
 
 def _assign_codes(frame, cb, dist, carry=()):
@@ -628,11 +673,10 @@ def _assign_codes(frame, cb, dist, carry=()):
     subspace (m == cm) and take min(struct(dist, c)) — one
     aggregation, deterministic centroid-id tie-break, no window.
     The ONE assignment implementation shared by query-time encoding
-    ([[_pq_frames]], the residual rung, [[sim_search_ivfpq_trained]])
+    ([[_pq_seeded]], the residual rung, [[sim_search_ivfpq_trained]])
     and training-time assignment ([[trained_pq_codebook]]'s Lloyd
-    loop), so the two can never drift — the Spark-side twin of the
-    ``_ivf_coarse_sql`` extraction (r10 review found three
-    hand-copied sites).
+    loop), so the two can never drift; [[_assign_codes_sql]] is its
+    oracle twin.
 
     ``carry`` columns are constant within a (vec_id, m) group and
     ride through as F.first instead of a join back to ``frame``."""
@@ -649,59 +693,36 @@ def _assign_codes(frame, cb, dist, carry=()):
     )
 
 
-def _pq_frames(e) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(sub, cb, codes) shared by the PQ rungs: per-(vector,
-    subspace) subvectors, the deterministic codebook (first
-    ``_PQ_K`` vectors' subvectors), and the one-byte code
-    assignment."""
-    ms = F.explode(
-        F.sequence(F.lit(0), F.lit(_PQ_M - 1))
-    ).alias("m")
-    sub = (
-        e.select("vec_id", "emb", ms)
-        .select(
-            "vec_id",
-            "m",
-            F.slice("emb", F.col("m") * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-        )
-        # three-plus consumers (codebook, code assignment, ADC table,
-        # and the IVF coarse frames) each re-run the scan + explode
-        # without a pin; measured 1.13 → 1.05 s on the IVF+PQ rung
-        .localCheckpoint(eager=False)
-    )
-    cb = (
-        sub.filter(F.col("vec_id") < _PQ_K)
-        .select(F.col("m").alias("cm"), F.col("vec_id").alias("c"),
-                F.col("sv").alias("cent"))
-    )
-    codes = _assign_codes(
-        sub,
-        cb,
-        F.round(_pq_sq_spark(F.col("sv"), F.col("cent")) * 1000000)
-        .cast("bigint"),
-    )
-    return sub, cb, codes
-
-
-def _pq_terms(sub: DataFrame, cb: DataFrame) -> DataFrame:
-    """Per-query ADC lookup table (query × subspace × code) in exact
-    integer micro-units."""
+def _pq_terms(frame, cb, dist, keys=()) -> DataFrame:
+    """Per-query ADC lookup table of ``dist`` between each query's
+    ``frame`` rows and codebook ``cb``: query × subspace × code, plus
+    the ``keys`` columns. Every column comes out renamed (tq, tm, tc,
+    t<key>, term_u): terms and codes share the ``sub`` lineage, and a
+    codes.m == terms.m predicate degrades to a trivially-true
+    self-comparison."""
     return (
-        sub.filter(F.col("vec_id") < _N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "m", "sv")
+        frame.filter(F.col("vec_id") < _N_QUERIES)
         .join(F.broadcast(cb), F.col("m") == F.col("cm"))
         .select(
-            "query_id",
-            # explicit renames: terms and codes share the `sub`
-            # lineage, and a codes.m == terms.m predicate degrades to
-            # a trivially-true self-comparison
+            F.col("vec_id").alias("tq"),
             F.col("m").alias("tm"),
             F.col("c").alias("tc"),
-            F.round(_pq_sq_spark(F.col("sv"), F.col("cent")) * 1000000)
-            .cast("bigint")
-            .alias("term_u"),
+            *[F.col(k).alias("t" + k) for k in keys],
+            dist.alias("term_u"),
         )
     )
+
+
+def _pq_seeded(sub: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(codes, terms) under the deterministic seeded codebook — the
+    first ``_PQ_K`` vectors' subvectors — with every distance
+    quantized once to integer micro-units."""
+    cb = sub.filter(F.col("vec_id") < _PQ_K).select(
+        F.col("m").alias("cm"), F.col("vec_id").alias("c"),
+        F.col("sv").alias("cent"),
+    )
+    dist = _micro(_sq_spark(_diff("sv", "cent")))
+    return _assign_codes(sub, cb, dist), _pq_terms(sub, cb, dist)
 
 
 def _pq_ranked(adc: DataFrame, unit: float = 1000000.0) -> DataFrame:
@@ -710,19 +731,12 @@ def _pq_ranked(adc: DataFrame, unit: float = 1000000.0) -> DataFrame:
     ``unit`` is the quantization scale dividing est_dist_u back to a
     double (1e6 for the round-per-term rungs, 1e12 for the
     fully-integer trained rung)."""
-    w = W.partitionBy("query_id").orderBy("est_dist_u", "neighbor_id")
-    return (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _PQ_TOP)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "est_dist_u",
-            (F.col("est_dist_u").cast("double") / unit).alias(
-                "est_dist"
-            ),
-            "rnk",
-        )
+    return _topk(adc, "est_dist_u", "neighbor_id", k=_PQ_TOP).select(
+        "query_id",
+        "neighbor_id",
+        "est_dist_u",
+        (F.col("est_dist_u").cast("double") / unit).alias("est_dist"),
+        "rnk",
     )
 
 
@@ -733,24 +747,17 @@ def _pq_ranked(adc: DataFrame, unit: float = 1000000.0) -> DataFrame:
 _IVFPQ_CELLS = 16   # coarse cells (deterministic: first 16 vectors)
 _IVFPQ_NPROBE = 4   # cells probed per query
 
-
-def _ivf_coarse_sql(cent_alias: str) -> str:
-    """The coarse-quantizer CTE block (ccb/cd/assign/probes) shared
-    verbatim by every IVF-family oracle — one construction site so
-    the rungs can never drift apart on assignment or probe
-    semantics. ``cent_alias`` names the centroid column (the
-    residual rung reads it as ``ccent`` to keep its residual
-    codebook's ``cent`` unambiguous)."""
-    return f"""ccb AS (  -- coarse centroids: subvectors of the first {_IVFPQ_CELLS} vectors
-      SELECT m.m, e.vec_id AS cell,
-             e.emb[m.m * {_PQ_SUB} + 1 : (m.m + 1) * {_PQ_SUB}] AS {cent_alias}
-      FROM e, (SELECT unnest(range(0, {_PQ_M})) AS m) m
-      WHERE e.vec_id < {_IVFPQ_CELLS}
+# the coarse quantizer (cells, assignment, probes) of every IVF-family
+# oracle — one construction site, so the rungs cannot drift apart on
+# assignment or probe semantics
+_IVF_COARSE_SQL = f"""
+    ccb AS (  -- coarse centroids: subvectors of the first {_IVFPQ_CELLS} vectors
+      SELECT m, vec_id AS cell, sv AS cent FROM sub WHERE vec_id < {_IVFPQ_CELLS}
     ),
     cd AS (  -- full squared distance to every cell, per subspace
       SELECT s.vec_id, ccb.cell,
-             CAST(SUM(CAST(round(({_pq_sq_sql("s.sv", "ccb." + cent_alias)}) * 1000000)
-                           AS BIGINT)) AS BIGINT) AS cdist_u
+             CAST(SUM({_micro_sql(_sq_sql(_diff_sql("s.sv", "ccb.cent")))})
+                  AS BIGINT) AS cdist_u
       FROM sub s JOIN ccb ON s.m = ccb.m
       GROUP BY 1, 2
     ),
@@ -768,11 +775,13 @@ def _ivf_coarse_sql(cent_alias: str) -> str:
     )"""
 
 
-_IVFPQ_SQL = f"""
-    WITH {_PQ_CORE_SQL},
-    {_ivf_coarse_sql("cent")},
+def _ivf_adc_sql(keys: tuple[str, ...] = (), unit: str = "1000000.0") -> str:
+    """SQL twin of [[_ivf_adc]] over the ``codes``, ``terms``,
+    ``assign`` and ``probes`` CTEs; ``keys`` are the extra pair
+    columns ``terms`` is keyed on."""
+    return f"""
     pairs AS (
-      SELECT p.query_id, a.vec_id
+      SELECT p.query_id, a.vec_id{"".join(f", a.{k}" for k in keys)}
       FROM probes p JOIN assign a ON p.cell = a.cell
       WHERE a.vec_id <> p.query_id
     ),
@@ -782,10 +791,18 @@ _IVFPQ_SQL = f"""
       FROM pairs pr
       JOIN codes c ON c.vec_id = pr.vec_id
       JOIN terms t ON t.query_id = pr.query_id
-                  AND t.m = c.m AND t.c = c.code
+                  AND t.m = c.m AND t.c = c.code{
+                      "".join(f" AND t.{k} = pr.{k}" for k in keys)}
       GROUP BY 1, 2
     )
-    {_PQ_RANKED_TAIL_SQL}
+    {_pq_ranked_tail_sql(unit)}"""
+
+
+_IVFPQ_SQL = f"""
+    WITH {_PQ_SUB_SQL},
+    {_PQ_SEEDED_SQL},
+    {_IVF_COARSE_SQL},
+    {_ivf_adc_sql()}
 """
 
 
@@ -813,64 +830,42 @@ def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deliberate simplification, documented: codes quantize RAW
     vectors, not per-cell residuals; residual encoding (classic
     IVFADC) is a drop-in — subtract the broadcast cell centroid
-    before [[_pq_frames]] — that changes no plan shape. Scale shape:
+    inside the distance — that changes no plan shape. Scale shape:
     coarse centroids, PQ codebook, and the per-query ADC+probe
     tables are broadcasts; `assign` is computed once at ingest (it
     would be the partition key of the codes table, making the
     probe-cell join partition pruning instead of a shuffle); the
     only data-proportional state the query touches is the pruned
     integer code stream."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
+    sub = _pq_sub(spark, sf_dir)
+    codes, terms = _pq_seeded(sub)
+    return _ivf_adc(codes, terms, *_ivfpq_coarse(sub))
+
+
+def _coarse_cells(sub: DataFrame) -> DataFrame:
+    """Coarse centroids ``(ccm, ccell, ccent)``: the first
+    ``_IVFPQ_CELLS`` vectors' subvectors, one row per (cell,
+    subspace)."""
+    return sub.filter(F.col("vec_id") < _IVFPQ_CELLS).select(
+        F.col("m").alias("ccm"), F.col("vec_id").alias("ccell"),
+        F.col("sv").alias("ccent"),
     )
-    sub, cb, codes = _pq_frames(e)
-    terms = _pq_terms(sub, cb)
-    assign, probes = _ivfpq_coarse(sub)
-    pairs = (
-        assign.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
-    adc = (
-        codes.join(pairs.withColumnRenamed("vec_id", "pv"),
-                   F.col("vec_id") == F.col("pv"))
-        .join(
-            # tq rename: pairs already carries a query_id and an
-            # ambiguous equality would not resolve
-            F.broadcast(terms.withColumnRenamed("query_id", "tq")),
-            (F.col("m") == F.col("tm"))
-            & (F.col("code") == F.col("tc"))
-            & (F.col("query_id") == F.col("tq")),
-        )
-        .groupBy(
-            F.col("query_id"), F.col("vec_id").alias("neighbor_id")
-        )
-        .agg(F.sum("term_u").cast("bigint").alias("est_dist_u"))
-    )
-    return _pq_ranked(adc)
 
 
 def _ivfpq_coarse(sub: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(assign, probes) for the IVF+PQ rung: per-vector cell
+    """(assign, probes) for the IVF+PQ rungs: per-vector cell
     assignment and per-query probed-cell set, both derived from one
     pinned coarse-distance frame (full squared distance to every
     coarse centroid, decomposed over the PQ subspaces as exact
     integer micro-unit sums). Module-level so the probed-cell
     containment test exercises the SAME construction the operator
     runs instead of a hand-copied twin that could drift."""
-    ccb = (
-        sub.filter(F.col("vec_id") < _IVFPQ_CELLS)
-        .select(F.col("m").alias("ccm"), F.col("vec_id").alias("cell"),
-                F.col("sv").alias("ccent"))
-    )
     cd = (
-        sub.join(F.broadcast(ccb), F.col("m") == F.col("ccm"))
+        sub.join(F.broadcast(_coarse_cells(sub)), F.col("m") == F.col("ccm"))
         .select(
             "vec_id",
-            "cell",
-            F.round(_pq_sq_spark(F.col("sv"), F.col("ccent")) * 1000000)
-            .cast("bigint")
-            .alias("cdist_u"),
+            F.col("ccell").alias("cell"),
+            _micro(_sq_spark(_diff("sv", "ccent"))).alias("cdist_u"),
         )
         .groupBy("vec_id", "cell")
         .agg(F.sum("cdist_u").cast("bigint").alias("cdist_u"))
@@ -881,97 +876,77 @@ def _ivfpq_coarse(sub: DataFrame) -> tuple[DataFrame, DataFrame]:
     assign = cd.groupBy("vec_id").agg(
         F.min(F.struct("cdist_u", "cell")).getField("cell").alias("cell")
     )
-    probe_w = W.partitionBy("query_id").orderBy("cdist_u", "cell")
-    probes = (
-        cd.filter(F.col("vec_id") < _N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "cell", "cdist_u")
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= _IVFPQ_NPROBE)
-        .select("query_id", "cell")
-    )
+    probes = _topk(
+        cd.filter(F.col("vec_id") < _N_QUERIES).select(
+            F.col("vec_id").alias("query_id"), "cell", "cdist_u"
+        ),
+        "cdist_u",
+        "cell",
+        k=_IVFPQ_NPROBE,
+    ).select("query_id", "cell")
     return assign, probes
 
 
-def _pq_sq_res_spark(a, ca, b, cb):
-    """Unrolled ||(a−ca) − (b−cb)||² over 8-dim subvectors — the
-    residual-space squared distance, with the residual subtractions
-    INSIDE the expression (no materialized residual arrays, stays in
-    whole-stage codegen) and the same association order as the SQL
-    twin, so the double is bit-identical in both engines."""
-    terms = [
-        (
-            (F.element_at(a, i) - F.element_at(ca, i))
-            - (F.element_at(b, i) - F.element_at(cb, i))
-        )
-        * (
-            (F.element_at(a, i) - F.element_at(ca, i))
-            - (F.element_at(b, i) - F.element_at(cb, i))
-        )
-        for i in range(1, _PQ_SUB + 1)
-    ]
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc + t
-    return acc
-
-
-def _pq_sq_res_sql(a: str, ca: str, b: str, cb: str) -> str:
-    return " + ".join(
-        f"(({a}[{i}] - {ca}[{i}]) - ({b}[{i}] - {cb}[{i}]))"
-        f" * (({a}[{i}] - {ca}[{i}]) - ({b}[{i}] - {cb}[{i}]))"
-        for i in range(1, _PQ_SUB + 1)
+def _ivf_adc(codes, terms, assign, probes, keys=(), unit=1000000.0):
+    """The query path of every IVF rung: probe pairs (corpus vectors
+    in a query's probed cells) → their codes → the broadcast ADC
+    table → per-pair SUM → [[_pq_ranked]]. ``keys`` are extra pair
+    columns the ``terms`` table is also keyed on, as ``t<key>`` (the
+    residual rung's per-cell tables pass ``("cell",)``). Only the
+    pruned integer code stream is data-proportional; probes and
+    terms are broadcast-sized."""
+    pairs = (
+        assign.join(F.broadcast(probes), "cell")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("pv"), *keys)
     )
+    on = (
+        (F.col("m") == F.col("tm"))
+        & (F.col("code") == F.col("tc"))
+        & (F.col("query_id") == F.col("tq"))
+    )
+    for k in keys:
+        on = on & (F.col(k) == F.col("t" + k))
+    adc = (
+        codes.join(pairs, F.col("vec_id") == F.col("pv"))
+        .join(F.broadcast(terms), on)
+        .groupBy(
+            F.col("query_id"), F.col("vec_id").alias("neighbor_id")
+        )
+        .agg(F.sum("term_u").cast("bigint").alias("est_dist_u"))
+    )
+    return _pq_ranked(adc, unit)
 
+
+_RESIDUAL_DIST_SQL = _micro_sql(_sq_sql(
+    lambda i: f"(s.sv[{i}] - s.ccent[{i}]) - (cb.csv[{i}] - cb.ccent_c[{i}])"
+))
 
 _IVFADC_SQL = f"""
-    WITH {_PQ_CORE_SQL},
-    {_ivf_coarse_sql("ccent")},
+    WITH {_PQ_SUB_SQL},
+    {_IVF_COARSE_SQL},
     rsub AS (  -- each vector's subvectors + its OWN cell centroid
-      SELECT s.vec_id, s.m, s.sv, a.cell, ccb.ccent
+      SELECT s.vec_id, s.m, s.sv, ccb.cent AS ccent
       FROM sub s
       JOIN assign a ON s.vec_id = a.vec_id
       JOIN ccb ON ccb.cell = a.cell AND ccb.m = s.m
+    ),
+    qsub AS (  -- each query's subvectors + every PROBED cell's centroid
+      SELECT s.vec_id, p.cell, s.m, s.sv, ccb.cent AS ccent
+      FROM probes p
+      JOIN sub s ON s.vec_id = p.query_id
+      JOIN ccb ON ccb.cell = p.cell AND ccb.m = s.m
     ),
     rcb AS (  -- residual codebook: residuals of the first {_PQ_K} vectors
       SELECT m AS cm, vec_id AS c, sv AS csv, ccent AS ccent_c
       FROM rsub WHERE vec_id < {_PQ_K}
     ),
-    rdists AS (
-      SELECT r.vec_id, r.m, rcb.c,
-             CAST(round(({_pq_sq_res_sql("r.sv", "r.ccent", "rcb.csv", "rcb.ccent_c")})
-                        * 1000000) AS BIGINT) AS dist_u
-      FROM rsub r JOIN rcb ON r.m = rcb.cm
+    codes AS ({_assign_codes_sql("rsub", "rcb", _RESIDUAL_DIST_SQL)}
     ),
-    rcodes AS (
-      SELECT vec_id, m, c AS code FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, m
-                                     ORDER BY dist_u, c) AS rn
-        FROM rdists) WHERE rn = 1
+    terms AS (  -- ADC table PER PROBED CELL: query × cell × subspace × code
+      {_pq_terms_sql("qsub", "rcb", _RESIDUAL_DIST_SQL, "s.cell, ")}
     ),
-    rterms AS (  -- ADC table PER PROBED CELL: query × cell × subspace × code
-      SELECT p.query_id, p.cell, q.m, rcb.c,
-             CAST(round(({_pq_sq_res_sql("q.sv", "ccb.ccent", "rcb.csv", "rcb.ccent_c")})
-                        * 1000000) AS BIGINT) AS term_u
-      FROM probes p
-      JOIN sub q ON q.vec_id = p.query_id
-      JOIN ccb ON ccb.cell = p.cell AND ccb.m = q.m
-      JOIN rcb ON rcb.cm = q.m
-    ),
-    pairs AS (
-      SELECT p.query_id, a.vec_id, a.cell
-      FROM probes p JOIN assign a ON p.cell = a.cell
-      WHERE a.vec_id <> p.query_id
-    ),
-    adc AS (
-      SELECT pr.query_id, c.vec_id AS neighbor_id,
-             CAST(SUM(t.term_u) AS BIGINT) AS est_dist_u
-      FROM pairs pr
-      JOIN rcodes c ON c.vec_id = pr.vec_id
-      JOIN rterms t ON t.query_id = pr.query_id AND t.cell = pr.cell
-                   AND t.m = c.m AND t.c = c.code
-      GROUP BY 1, 2
-    )
-    {_PQ_RANKED_TAIL_SQL}
+    {_ivf_adc_sql(("cell",))}
 """
 
 
@@ -1015,22 +990,17 @@ def sim_search_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse centroids, residual codebook, probes, and the per-cell
     ADC tables broadcast; the only data-proportional state is the
     integer code stream, partition-prunable by cell."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
-    sub, _, _ = _pq_frames(e)
+    sub = _pq_sub(spark, sf_dir)
     assign, probes = _ivfpq_coarse(sub)
-    ccb = (
-        sub.filter(F.col("vec_id") < _IVFPQ_CELLS)
-        .select(F.col("m").alias("ccm"), F.col("vec_id").alias("ccell"),
-                F.col("sv").alias("ccent"))
-    )
-    rsub = (
-        sub.join(assign, "vec_id")
-        .join(
-            F.broadcast(ccb),
-            (F.col("m") == F.col("ccm")) & (F.col("cell") == F.col("ccell")),
+    ccb = F.broadcast(_coarse_cells(sub))
+
+    def with_cell_centroid(frame):
+        return frame.join(
+            ccb, (F.col("m") == F.col("ccm")) & (F.col("cell") == F.col("ccell"))
         )
+
+    rsub = (
+        with_cell_centroid(sub.join(assign, "vec_id"))
         .select("vec_id", "m", "sv", "cell", "ccent")
         # feeds the residual codebook, the code assignment, and (for
         # the first vectors) nothing else twice — pin the join fan-in
@@ -1042,67 +1012,20 @@ def sim_search_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sv").alias("csv"),
         F.col("ccent").alias("ccent_c"),
     )
-    rcodes = _assign_codes(
-        rsub,
-        rcb,
-        F.round(
-            _pq_sq_res_spark(
-                F.col("sv"), F.col("ccent"), F.col("csv"), F.col("ccent_c")
-            )
-            * 1000000
-        )
-        .cast("bigint"),
+    # the residual subtractions sit INSIDE the unrolled expression:
+    # no materialized residual arrays, and the SQL twin's order
+    own, seed = _diff("sv", "ccent"), _diff("csv", "ccent_c")
+    dist = _micro(_sq_spark(lambda i: own(i) - seed(i)))
+    query_cells = with_cell_centroid(
+        probes.join(sub, F.col("query_id") == F.col("vec_id"))
     )
-    rterms = (
-        probes.join(
-            sub.select(F.col("vec_id").alias("qv"), "m", "sv"),
-            F.col("query_id") == F.col("qv"),
-        )
-        .join(
-            F.broadcast(ccb),
-            (F.col("m") == F.col("ccm")) & (F.col("cell") == F.col("ccell")),
-        )
-        .join(F.broadcast(rcb), F.col("m") == F.col("cm"))
-        .select(
-            F.col("query_id").alias("tq"),
-            F.col("cell").alias("tcell"),
-            F.col("m").alias("tm"),
-            F.col("c").alias("tc"),
-            F.round(
-                _pq_sq_res_spark(
-                    F.col("sv"), F.col("ccent"), F.col("csv"), F.col("ccent_c")
-                )
-                * 1000000
-            )
-            .cast("bigint")
-            .alias("term_u"),
-        )
+    return _ivf_adc(
+        _assign_codes(rsub, rcb, dist),
+        _pq_terms(query_cells, rcb, dist, keys=("cell",)),
+        assign,
+        probes,
+        keys=("cell",),
     )
-    pairs = (
-        assign.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "cell")
-    )
-    adc = (
-        rcodes.join(
-            pairs.select(
-                F.col("query_id"), F.col("vec_id").alias("pv"), F.col("cell")
-            ),
-            F.col("vec_id") == F.col("pv"),
-        )
-        .join(
-            F.broadcast(rterms),
-            (F.col("m") == F.col("tm"))
-            & (F.col("code") == F.col("tc"))
-            & (F.col("query_id") == F.col("tq"))
-            & (F.col("cell") == F.col("tcell")),
-        )
-        .groupBy(
-            F.col("query_id"), F.col("vec_id").alias("neighbor_id")
-        )
-        .agg(F.sum("term_u").cast("bigint").alias("est_dist_u"))
-    )
-    return _pq_ranked(adc)
 
 
 # ---------------------------------------------------------------------------
@@ -1119,17 +1042,14 @@ _PQT_ITERS = 2
 
 def _squ_frame(sub: DataFrame) -> DataFrame:
     """Integer micro-unit subvectors (vec_id, m, svu array<bigint>):
-    the double subvectors of [[_pq_frames]] quantized ONCE, so every
+    the double subvectors of [[_pq_sub]] quantized ONCE, so every
     downstream training / coding / ADC step is exact bigint
     arithmetic with no further rounding (components ≤0.58 → ≤5.8e5
     micro-units; an 8-term squared distance ≤1.1e13, far inside
     bigint). Pinned: the Lloyd loop reads it once per iteration and
     the code/ADC stages read it twice more."""
     svu = F.array(
-        *[
-            F.round(F.element_at("sv", i) * 1000000).cast("bigint")
-            for i in range(1, _PQ_SUB + 1)
-        ]
+        *[_micro(F.element_at("sv", i)) for i in range(1, _PQ_SUB + 1)]
     )
     return (
         sub.select("vec_id", "m", svu.alias("svu"))
@@ -1178,7 +1098,7 @@ def trained_pq_codebook(
         asg = _assign_codes(
             squ,
             cb,
-            _pq_sq_spark(F.col("svu"), F.col("cent")),
+            _sq_spark(_diff("svu", "cent")),
             carry=("svu",),
         )
         means = (
@@ -1222,119 +1142,7 @@ def trained_pq_codebook(
     return cb
 
 
-def _codebook_cache_dir() -> str:
-    """User-owned 0700 artifact-cache dir ($XDG_CACHE_HOME or
-    ~/.cache) — a world-writable tempdir would let another local
-    user pre-seed a poisoned artifact at a predictable name."""
-    import os
-
-    cache_root = os.environ.get("XDG_CACHE_HOME") or os.path.join(
-        os.path.expanduser("~"), ".cache"
-    )
-    cache_dir = os.path.join(cache_root, "dps_spark_graft")
-    os.makedirs(cache_dir, mode=0o700, exist_ok=True)
-    os.chmod(cache_dir, 0o700)
-    return cache_dir
-
-
-def _trained_codebook_cached(
-    spark: SparkSession, sf_dir: str, squ: DataFrame
-) -> DataFrame:
-    """The trained codebook as a PERSISTED INDEX ARTIFACT: train
-    once per corpus, serve every later query from the saved parquet
-    — the deployment shape the r10/r11 floor decompositions argued
-    training amortizes into. The cache key fingerprints the SOURCE
-    FILES (embeddings parquet names + sizes + mtimes — no Spark job
-    spent on fingerprinting) plus every training hyperparameter and
-    a schema version, so a regenerated corpus retrains and a stale
-    artifact can never serve; the artifact itself is the
-    deterministic Lloyd output, so cached and fresh codebooks are
-    byte-identical and the value oracle (which always re-trains in
-    SQL) cannot tell the difference. Writes are atomic
-    (stage + rename); a concurrent loser just deletes its stage —
-    both trained the same bytes — and re-verifies the winner's
-    ``_SUCCESS`` before reading. The artifact lives under a
-    USER-OWNED mode-0700 cache dir ($XDG_CACHE_HOME or ~/.cache),
-    never a world-shared tempdir, so no other local user can
-    pre-seed a poisoned codebook at a predictable path. ~64 tiny
-    rows; at 100 TB this file is the FAISS ``index.train()``
-    artifact checked into the feature store next to the code
-    stream."""
-    import hashlib
-    import os
-    import shutil
-
-    src = os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")
-    if os.path.isdir(src):
-        stats = sorted(
-            (f, st.st_size, st.st_mtime_ns)
-            for f, st in (
-                (f, os.stat(os.path.join(src, f)))
-                for f in os.listdir(src)
-            )
-            if not f.startswith(("_", "."))
-        )
-    else:
-        st = os.stat(src)
-        stats = [(os.path.basename(src), st.st_size, st.st_mtime_ns)]
-    raw = (
-        f"{src}|{stats}|{_PQ_M}|"
-        f"{_PQ_K}|{_PQ_SUB}|{_PQT_ITERS}|v1"
-    )
-    key = hashlib.md5(raw.encode()).hexdigest()[:16]
-    path = os.path.join(
-        _codebook_cache_dir(), f"pq_codebook_{key}.parquet"
-    )
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    # Repair path (r16 self-review): an artifact dir WITHOUT
-    # _SUCCESS is an incomplete write — a crashed promotion, or a
-    # session configured with marksuccessfuljobs=false. Left in
-    # place it poisons the cache permanently: every later run
-    # retrains, loses the rename to the occupied path, finds no
-    # _SUCCESS, and raises. Remove it (the artifact is a
-    # deterministic retrain away) along with any stale stage dirs
-    # leaked by crashed writers of the same key.
-    if os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
-    # Only reap stage dirs that are STALE by mtime (r17 advisor fix):
-    # a fresh foreign stage belongs to a live concurrent writer — an
-    # unconditional rmtree would delete session A's in-progress stage
-    # from session B's cold path, failing A's os.rename loudly where
-    # the promotion race used to be benign. 10 min dwarfs any real
-    # codebook train+write; a crashed writer's leak is reaped on the
-    # first cold pass after that.
-    import time as _time
-
-    _STAGE_STALE_S = 600
-    for stale in (
-        d
-        for d in os.listdir(os.path.dirname(path))
-        if d.startswith(os.path.basename(path) + ".stage")
-    ):
-        full = os.path.join(os.path.dirname(path), stale)
-        try:
-            age = _time.time() - os.stat(full).st_mtime
-        except OSError:
-            continue  # vanished: its owner just promoted or cleaned
-        if age > _STAGE_STALE_S:
-            shutil.rmtree(full, ignore_errors=True)
-    cbt = trained_pq_codebook(squ)
-    stage = f"{path}.stage{os.getpid()}"
-    cbt.write.mode("overwrite").parquet(stage)
-    try:
-        os.rename(stage, path)
-    except OSError:
-        # another session promoted the same deterministic artifact;
-        # drop our stage, then re-verify the winner actually
-        # completed before serving from its path
-        shutil.rmtree(stage, ignore_errors=True)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            raise RuntimeError(
-                f"codebook artifact at {path} lost the promotion "
-                "race but the winner left no _SUCCESS marker"
-            )
-    return spark.read.parquet(path)
+_TRAINED_DIST_SQL = _sq_sql(_diff_sql("s.svu", "cb.cent"))
 
 
 def _trained_cb_sql(iters: int = _PQT_ITERS) -> str:
@@ -1344,10 +1152,7 @@ def _trained_cb_sql(iters: int = _PQT_ITERS) -> str:
     replays the identical training run."""
     arr_q = (
         "["
-        + ", ".join(
-            f"CAST(round(sv[{i}] * 1000000) AS BIGINT)"
-            for i in range(1, _PQ_SUB + 1)
-        )
+        + ", ".join(_micro_sql(f"sv[{i}]") for i in range(1, _PQ_SUB + 1))
         + "]"
     )
     mean_arr = (
@@ -1369,13 +1174,7 @@ def _trained_cb_sql(iters: int = _PQT_ITERS) -> str:
     ]
     for t in range(1, iters + 1):
         ctes.append(
-            f"""at{t} AS (
-      SELECT vec_id, m, svu, c AS code FROM (
-        SELECT s.vec_id, s.m, s.svu, cb.c,
-               row_number() OVER (
-                   PARTITION BY s.vec_id, s.m
-                   ORDER BY ({_pq_sq_sql("s.svu", "cb.cent")}), cb.c) AS rn
-        FROM squ s JOIN cbt{t - 1} cb ON s.m = cb.cm) WHERE rn = 1
+            f"""at{t} AS ({_assign_codes_sql("squ", f"cbt{t - 1}", _TRAINED_DIST_SQL, "svu, ")}
     ),
     cbt{t} AS (
       SELECT p.cm, p.c, COALESCE(n.cent_new, p.cent) AS cent
@@ -1389,45 +1188,14 @@ def _trained_cb_sql(iters: int = _PQT_ITERS) -> str:
 
 
 _IVFPQ_TRAINED_SQL = f"""
-    WITH e AS (
-      SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-    ),
-    sub AS (
-      SELECT e.vec_id, m.m,
-             e.emb[m.m * {_PQ_SUB} + 1 : (m.m + 1) * {_PQ_SUB}] AS sv
-      FROM e, (SELECT unnest(range(0, {_PQ_M})) AS m) m
-    ),
+    WITH {_PQ_SUB_SQL},
     {_trained_cb_sql()},
-    codest AS (
-      SELECT vec_id, m, c AS code FROM (
-        SELECT s.vec_id, s.m, cb.c,
-               row_number() OVER (
-                   PARTITION BY s.vec_id, s.m
-                   ORDER BY ({_pq_sq_sql("s.svu", "cb.cent")}), cb.c) AS rn
-        FROM squ s JOIN cbt{_PQT_ITERS} cb ON s.m = cb.cm) WHERE rn = 1
+    codes AS ({_assign_codes_sql("squ", f"cbt{_PQT_ITERS}", _TRAINED_DIST_SQL)}
     ),
-    termst AS (
-      SELECT q.vec_id AS query_id, cb.cm AS m, cb.c,
-             ({_pq_sq_sql("q.svu", "cb.cent")}) AS term_u
-      FROM squ q JOIN cbt{_PQT_ITERS} cb ON q.m = cb.cm
-      WHERE q.vec_id < {_N_QUERIES}
+    terms AS ({_pq_terms_sql("squ", f"cbt{_PQT_ITERS}", _TRAINED_DIST_SQL)}
     ),
-    {_ivf_coarse_sql("cent")},
-    pairs AS (
-      SELECT p.query_id, a.vec_id
-      FROM probes p JOIN assign a ON p.cell = a.cell
-      WHERE a.vec_id <> p.query_id
-    ),
-    adc AS (
-      SELECT pr.query_id, c.vec_id AS neighbor_id,
-             CAST(SUM(t.term_u) AS BIGINT) AS est_dist_u
-      FROM pairs pr
-      JOIN codest c ON c.vec_id = pr.vec_id
-      JOIN termst t ON t.query_id = pr.query_id
-                   AND t.m = c.m AND t.c = c.code
-      GROUP BY 1, 2
-    )
-    {_pq_ranked_tail_sql("1000000000000.0")}
+    {_IVF_COARSE_SQL},
+    {_ivf_adc_sql(unit="1000000000000.0")}
 """
 
 
@@ -1466,62 +1234,27 @@ def sim_search_ivfpq_trained(
     wider unit in the ranked tail.
 
     Scale shape: training adds 2 broadcast-join + tiny-agg rounds
-    over the pinned subvector stream (ingest-time cost, amortized
-    over every query the index serves); the query path is byte-for-
-    byte [[sim_search_ivfpq]]'s — broadcast codebook/probes/ADC
-    table, integer code stream as the only data-proportional
-    state. As of r12 the amortization is MATERIALIZED, not just
-    argued: the trained codebook persists as an index artifact
-    (``_trained_codebook_cached`` — content-fingerprinted parquet,
-    exactly the "train at ingest, serve forever" deployment the r11
-    floor decomposition described), so the first invocation per
-    corpus trains (12 jobs) and every later one serves from the
-    artifact; values are identical either way because training is
-    deterministic, which is also why the SQL oracle — which always
-    re-trains in its unrolled Lloyd CTEs — still matches
-    bit-for-bit."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
-    sub, _, _ = _pq_frames(e)
+    over the pinned subvector stream; the query path is
+    [[sim_search_ivfpq]]'s — broadcast codebook/probes/ADC table,
+    integer code stream as the only data-proportional state. Every
+    call trains its codebook, as the SQL oracle does in its unrolled
+    Lloyd CTEs, and writes nothing outside the query, so a first
+    call and a later one do the same work. Measured at sf0.1 on 4
+    cores (noop sink): 22 jobs per call, 6.0–6.9 s for a session's
+    first call and 3.4–4.7 s warm. A codebook persisted across
+    calls saves the 8 training jobs (1.9–3.6 s warm, 14 jobs); that
+    belongs in an explicit index-build step whose output the query
+    takes as input, not in hidden per-user state."""
+    sub = _pq_sub(spark, sf_dir)
     squ = _squ_frame(sub)
-    cbt = _trained_codebook_cached(spark, sf_dir, squ)
-    codes = _assign_codes(
-        squ, cbt, _pq_sq_spark(F.col("svu"), F.col("cent"))
+    cbt = trained_pq_codebook(squ)
+    dist = _sq_spark(_diff("svu", "cent"))
+    return _ivf_adc(
+        _assign_codes(squ, cbt, dist),
+        _pq_terms(squ, cbt, dist),
+        *_ivfpq_coarse(sub),
+        unit=1e12,
     )
-    terms = (
-        squ.filter(F.col("vec_id") < _N_QUERIES)
-        .join(F.broadcast(cbt), F.col("m") == F.col("cm"))
-        .select(
-            F.col("vec_id").alias("tq"),
-            F.col("m").alias("tm"),
-            F.col("c").alias("tc"),
-            _pq_sq_spark(F.col("svu"), F.col("cent")).alias("term_u"),
-        )
-    )
-    assign, probes = _ivfpq_coarse(sub)
-    pairs = (
-        assign.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
-    adc = (
-        codes.join(
-            pairs.withColumnRenamed("vec_id", "pv"),
-            F.col("vec_id") == F.col("pv"),
-        )
-        .join(
-            F.broadcast(terms),
-            (F.col("tm") == F.col("m"))
-            & (F.col("tc") == F.col("code"))
-            & (F.col("tq") == F.col("query_id")),
-        )
-        .groupBy(
-            F.col("query_id"), F.col("vec_id").alias("neighbor_id")
-        )
-        .agg(F.sum("term_u").cast("bigint").alias("est_dist_u"))
-    )
-    return _pq_ranked(adc, unit=1e12)
 
 
 # ---------------------------------------------------------------------------
@@ -1624,9 +1357,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(W.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
         .alias("lex_rank"),
     )
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
+    e = _embeddings(spark, sf_dir)
     q = e.filter(F.col("vec_id") == 0).select(
         F.col("emb").alias("q_emb")
     )
@@ -1734,9 +1465,7 @@ def sim_search_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     lever); in the bucketed rungs the same condition composes with
     the IVF bucket join ([[sim_search_ivf]]) so filters and coarse
     quantization multiply rather than compete."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double_array(F.col("embedding")).alias("emb")
-    )
+    e = _embeddings(spark, sf_dir, "label")
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("q_label"),
@@ -1752,18 +1481,12 @@ def sim_search_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.round(cosine(F.col("q_emb"), F.col("emb")), 4).alias("cos_sim"),
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-    )
+    return _topk(scored)
 
 
 _IVF_STATS_SQL = f"""
-    WITH {_PQ_CORE_SQL},
-    {_ivf_coarse_sql("cent")},
+    WITH {_PQ_SUB_SQL},
+    {_IVF_COARSE_SQL},
     b AS (SELECT cell, COUNT(*) AS n FROM assign GROUP BY cell),
     t AS (SELECT cell, n,
                  SUM(n)   OVER () AS nt,
@@ -1792,16 +1515,12 @@ def sim_search_ivf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys.
 
     Reuses the EXACT assignment machinery of [[sim_search_ivfpq]]
-    (``_ivfpq_coarse`` in Spark, the shared ``_ivf_coarse_sql`` CTE
+    (``_ivfpq_coarse`` in Spark, the shared ``_IVF_COARSE_SQL`` CTEs
     in the oracle), so the report can never drift from what the
     serving rung actually does. All post-assignment work is a
     k-row aggregate; the global window runs over the k cell counts,
     never over vectors."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
-    sub, _cb, _codes = _pq_frames(e)
-    assign, _probes = _ivfpq_coarse(sub)
+    assign, _probes = _ivfpq_coarse(_pq_sub(spark, sf_dir))
     b = assign.groupBy("cell").agg(F.count("*").alias("n"))
     wg = W.partitionBy()
     nt = F.sum("n").over(wg).cast("double")

@@ -25,7 +25,24 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus:
+        return int(cpus)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of physical RAM in whole
+    GiB, between 1g and 48g: a fixed heap larger than the host lets
+    the JVM grow until the kernel kills it."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, ram // 2 // 2**30))}g"
 
 
 def adaptive_shuffle_width(df, per_split: int = 4, floor: int = 8) -> int:
@@ -162,7 +179,7 @@ def get_spark(app_name: str = "data-pipeline-spark-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- local-mode hygiene ----------------------------------------------
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -6,15 +6,24 @@ and reports, per headline query and per parquet scan: the table, the
 ReadSchema width vs the table's full width, and whether any filter
 was pushed. Exit code 1 if a scan reads a table FULL-WIDTH without
 being on the recorded exception list (queries whose semantics
-genuinely consume every column), so the audit can run as a CI pin.
+genuinely consume every column), or if no scan matched at all (a
+plan-format drift must not pass vacuously), so the audit can run as
+a CI pin from any working directory.
 
     python scripts/dump_plans.py && python scripts/io_audit.py
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
+
+PLANS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "docs",
+    "PLANS.md",
+)
 
 # top-level column counts of the fixture tables (sf-independent)
 WIDTHS = {
@@ -42,7 +51,7 @@ NARROW_OK = {"region", "nation", "embeddings"}
 
 
 def main() -> int:
-    md = open("docs/PLANS.md").read()
+    md = open(PLANS).read()
     failures: list[str] = []
     n_scans = 0
     n_pushed = 0
@@ -75,6 +84,8 @@ def main() -> int:
         f"{n_pushed} with pushed filters; "
         f"{len(failures)} unexplained full-width reads"
     )
+    if not n_scans:
+        failures.append(f"no FileScan parquet entry matched in {PLANS}")
     for f in failures:
         print("  FAIL", f)
     return 1 if failures else 0

@@ -24,13 +24,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     import duckdb
 
-    from pyspark.sql import functions as F
-
     from data_pipeline_spark_spark import registry
-    from data_pipeline_spark_spark.catalog import load
-    from data_pipeline_spark_spark.functions.vector import as_double_array
     from data_pipeline_spark_spark.operators.similarity import (
-        _pq_frames,
+        _pq_sub,
         _squ_frame,
         trained_pq_codebook,
     )
@@ -65,11 +61,7 @@ def main() -> None:
         )
 
         def train_only():
-            e = load(spark, sf_dir, "embeddings").select(
-                "vec_id", as_double_array(F.col("embedding")).alias("emb")
-            )
-            sub, _, _ = _pq_frames(e)
-            return trained_pq_codebook(_squ_frame(sub))
+            return trained_pq_codebook(_squ_frame(_pq_sub(spark, sf_dir)))
 
         tb, tt, tj = timed_jobs(train_only)
         out = {

@@ -386,3 +386,31 @@ def test_q21_aggregation_shape(spark, sf_dir):
     plan = formatted_plan(tpch_q21_suppliers_who_kept_waiting(spark, sf_dir))
     assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
     assert "Expand" not in plan, plan
+
+
+def test_default_parallelism_follows_cpu_affinity(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset the session sizes itself to the
+    cores this process may run on; the variable still overrides."""
+    import os
+
+    from data_pipeline_spark_spark.session import default_parallelism
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3
+
+
+def test_default_driver_memory_is_half_of_ram(monkeypatch):
+    """With SPARK_GRAFT_DRIVER_MEM unset the driver heap is half of
+    physical RAM in whole GiB, clamped to 1g..48g; the variable still
+    overrides."""
+    import os
+
+    from data_pipeline_spark_spark.session import default_driver_memory
+
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert default_driver_memory() == f"{min(48, max(1, ram // 2**31))}g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"

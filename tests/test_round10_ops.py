@@ -152,21 +152,13 @@ def test_trained_codebook_covers_every_subspace_code(spark, sf_dir):
     holds exactly M·K centroids with the seed's key set (empty
     clusters carry forward rather than vanish), each an
     _PQ_SUB-dim integer vector."""
-    from data_pipeline_spark_spark.catalog import load
-    from data_pipeline_spark_spark.functions.vector import (
-        as_double_array,
-    )
     from data_pipeline_spark_spark.operators.similarity import (
         _PQ_M,
-        _pq_frames,
+        _pq_sub,
         _squ_frame,
     )
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
-    sub, _, _ = _pq_frames(e)
-    rows = trained_pq_codebook(_squ_frame(sub)).collect()
+    rows = trained_pq_codebook(_squ_frame(_pq_sub(spark, sf_dir))).collect()
     assert {(r.cm, r.c) for r in rows} == {
         (m, c) for m in range(_PQ_M) for c in range(_PQ_K)
     }

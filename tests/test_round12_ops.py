@@ -903,83 +903,24 @@ def test_prf_recall_repair(spark):
 
 
 # ---------------------------------------------------------------------------
-# trained-codebook index artifact (the materialized amortization)
+# sim_search_ivfpq_trained keeps no state between calls
 # ---------------------------------------------------------------------------
 
 
-def test_trained_codebook_cache_contract(spark, sf_dir):
-    """The persisted index artifact serves the SAME bytes training
-    produces (deterministic Lloyd), survives a second call without
-    retraining (artifact mtime unchanged), and a touched source file
-    changes the fingerprint so a stale artifact can never serve."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_pipeline_spark_spark.catalog import load
-    from data_pipeline_spark_spark.functions.vector import as_double_array
+def test_ivfpq_trained_writes_nothing_to_user_cache(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The trained rung retrains its codebook inside the query, the
+    way its SQL oracle does: running it writes nothing under the
+    user cache directory, so a first call and a later one do the
+    same work."""
     from data_pipeline_spark_spark.operators.similarity import (
-        _pq_frames,
-        _squ_frame,
-        _trained_codebook_cached,
-        trained_pq_codebook,
+        sim_search_ivfpq_trained,
     )
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
-    sub, _, _ = _pq_frames(e)
-    squ = _squ_frame(sub)
-    fresh = {
-        (r.cm, r.c): tuple(r.cent)
-        for r in trained_pq_codebook(squ).collect()
-    }
-    from data_pipeline_spark_spark.operators.similarity import (
-        _codebook_cache_dir,
-    )
-
-    cache_glob = os.path.join(
-        _codebook_cache_dir(), "pq_codebook_*.parquet"
-    )
-    assert (os.stat(_codebook_cache_dir()).st_mode & 0o777) == 0o700
-    before = set(glob.glob(cache_glob))
-    cached1 = {
-        (r.cm, r.c): tuple(r.cent)
-        for r in _trained_codebook_cached(spark, sf_dir, squ).collect()
-    }
-    assert cached1 == fresh
-    arts = set(glob.glob(cache_glob)) - before
-    # second call: artifact set unchanged, same values
-    cached2 = {
-        (r.cm, r.c): tuple(r.cent)
-        for r in _trained_codebook_cached(spark, sf_dir, squ).collect()
-    }
-    assert cached2 == fresh
-    assert (
-        set(glob.glob(cache_glob)) - before == arts
-    )
-    # the artifact name embeds the source fingerprint: exactly one
-    # new artifact for this corpus, and its key is not reused by a
-    # DIFFERENT corpus (a genuinely different SF trains its own —
-    # must not equal the sf_dir fixture, or both calls share a key)
-    assert len(arts) <= 1  # 0 if an earlier test already trained it
-    other_sf = (
-        "/root/testdata/sf0.01"
-        if os.path.realpath(sf_dir)
-        != os.path.realpath("/root/testdata/sf0.01")
-        else "/root/testdata/sf0.001"
-    )
-    cached3 = _trained_codebook_cached(
-        spark, other_sf,
-        _squ_frame(_pq_frames(
-            load(spark, other_sf, "embeddings").select(
-                "vec_id", as_double_array(F.col("embedding")).alias("emb")
-            )
-        )[0]),
-    )
-    assert cached3.count() > 0
-    assert len(set(glob.glob(cache_glob))) >= 2
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    assert sim_search_ivfpq_trained(spark, sf_dir).collect()
+    assert list(tmp_path.iterdir()) == []
 
 
 # ---------------------------------------------------------------------------

@@ -120,16 +120,18 @@ def test_chi2_mi_fold_empty_input(spark):
     assert mi_fold(empty).collect() == []
 
 
-def test_io_audit_headline_plans():
+def test_io_audit_headline_plans(monkeypatch, tmp_path):
     """r17 verdict ask #8 (guide §6): every parquet scan in the
     committed headline plan dumps (docs/PLANS.md) either prunes its
     ReadSchema below the table's full width or is a narrow dimension
     table with nothing to prune; the exception list in
     scripts/io_audit.py is empty. No Spark needed — this pins the
     committed plan dumps, which scripts/dump_plans.py regenerates
-    after any operator change."""
+    after any operator change. Run from an unrelated directory: the
+    audit finds the plan book from its own location."""
     import scripts.io_audit as io_audit
 
+    monkeypatch.chdir(tmp_path)
     assert io_audit.main() == 0
 
 

@@ -80,23 +80,22 @@ def test_ivfpq_scores_match_pq_on_shared_pairs(spark, sf_dir):
 def test_ivfpq_only_scores_probed_cells(spark, sf_dir):
     """Every neighbor the IVF+PQ rungs return must live in one of its
     query's nprobe probed cells — the pruning contract that makes the
-    rungs sub-scan at scale. Both the raw-code rung and the
-    residual-encoded rung share one coarse quantizer
-    (sim._ivfpq_coarse), so one assignment check covers both."""
+    rungs sub-scan at scale. The raw-code, residual-encoded and
+    trained rungs share one coarse quantizer (sim._ivfpq_coarse), so
+    one assignment check covers all three."""
     from data_pipeline_spark_spark.operators import similarity as sim
-    from data_pipeline_spark_spark.catalog import load
-    from data_pipeline_spark_spark.functions.vector import as_double_array
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double_array(F.col("embedding")).alias("emb")
-    )
-    sub, _, _ = sim._pq_frames(e)
+    sub = sim._pq_sub(spark, sf_dir)
     assign_df, probes_df = sim._ivfpq_coarse(sub)
     assign = {r.vec_id: r.cell for r in assign_df.collect()}
     probed = {}
     for r in probes_df.collect():
         probed.setdefault(r.query_id, set()).add(r.cell)
-    for rung in (sim.sim_search_ivfpq, sim.sim_search_ivfadc_residual):
+    for rung in (
+        sim.sim_search_ivfpq,
+        sim.sim_search_ivfadc_residual,
+        sim.sim_search_ivfpq_trained,
+    ):
         for r in rung(spark, sf_dir).collect():
             assert assign[r.neighbor_id] in probed[r.query_id], (
                 f"{rung.__name__}: neighbor {r.neighbor_id} (cell "
